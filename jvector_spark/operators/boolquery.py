@@ -340,53 +340,29 @@ def boolean_search_index(
     from collections.abc import Iterator
 
     from jvector_spark.operators.wand import (
-        _TopK, _filter_key, empty_topk, global_term_stats, idf_map,
-        merge_topk, scatter_paths,
-    )
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
+        _TopK, _filter_key, global_term_stats, idf_map, merge_topk,
+        open_segments, scatter_segments,
     )
 
     asts = {int(r.qid): parse_query(str(r.query))
             for r in queries.itertuples()}
     ks = {int(r.qid): int(r.k) for r in queries.itertuples()}
+    # positive terms drive the bloom skip: every match has >=1 positive
+    # term, so a segment whose bloom rejects ALL of them cannot
+    # contribute (negated terms never create matches)
     pos_terms = sorted({leaf.text for a in asts.values()
                         for leaf in positive_leaves(a)})
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    n_docs, avgdl = manifest["n_docs"], manifest["avgdl"]
-    idfs = idf_map(n_docs, global_term_stats(spark, index_dir, pos_terms)
-                   if pos_terms else {})
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    if not seg_paths:
-        return empty_topk(spark, "score", merge)
 
-    sc = spark.sparkContext
-    b_asts = sc.broadcast(asts)
-    b_ks = sc.broadcast(ks)
-    b_idfs = sc.broadcast(idfs)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    def prepare(manifest: dict):
+        idfs = idf_map(manifest["n_docs"],
+                       global_term_stats(spark, index_dir, pos_terms)
+                       if pos_terms else {})
+        return asts, ks, idfs, manifest["avgdl"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        if not paths:
-            return
-        asts_l, idfs_l = b_asts.value, b_idfs.value
-        states = {qid: _TopK(b_ks.value[qid]) for qid in asts_l}
-        # positive terms drive the bloom skip: every match has >=1
-        # positive term, so a segment whose bloom rejects ALL of them
-        # cannot contribute (negated terms never create matches)
-        probe = sorted({leaf.text for a in asts_l.values()
-                        for leaf in positive_leaves(a)})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
-                continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
+    def run(paths: list[str], payload, tomb) -> Iterator[pd.DataFrame]:
+        asts_l, ks_l, idfs_l, avgdl = payload
+        states = {qid: _TopK(ks_l[qid]) for qid in asts_l}
+        for _path, reader, tomb_l in open_segments(paths, tomb, pos_terms):
             seg_cache: dict = {}
             accept = None
             if doc_filter:
@@ -405,7 +381,9 @@ def boolean_search_index(
         if out:
             yield pd.concat(out, ignore_index=True)
 
-    partial = paths_df.mapInPandas(run, "qid long, docid long, score double")
+    partial = scatter_segments(spark, index_dir, run,
+                               "qid long, docid long, score double",
+                               num_tasks, prepare)
     return merge_topk(partial, ks, "score", merge)
 
 

@@ -36,6 +36,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jvector_spark.operators.wand import open_segments, scatter_segments
+from jvector_spark.sources.segment import SegmentReader
+
 
 def _matched_docids(reader, terms: list[str], tombstones, accept) -> np.ndarray:
     parts = [reader.decode_term(t)[0] for t in terms if reader.has_term(t)]
@@ -49,6 +52,33 @@ def _matched_docids(reader, terms: list[str], tombstones, accept) -> np.ndarray:
     return d
 
 
+def _query_terms(queries: pd.DataFrame) -> dict[int, list[str]]:
+    return {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
+
+
+def _probe(qterms: dict[int, list[str]]) -> list[str]:
+    """Bloom probe of an OR-match query set: every match holds one of
+    these terms."""
+    return sorted({t for ts in qterms.values() for t in ts})
+
+
+def _matches(paths: list[str], qterms: dict[int, list[str]], tomb,
+             doc_filter: dict | None) -> Iterator[tuple]:
+    """One task's OR-match sets: (reader, qid, matched docids) for every
+    (segment, query) with a live match, deletes excluded and doc_filter
+    honored. Queries with the same terms share one match per segment."""
+    for _path, reader, tomb_l in open_segments(paths, tomb, _probe(qterms)):
+        accept = reader.accepted_docids(doc_filter) if doc_filter else None
+        memo: dict[tuple, np.ndarray] = {}
+        for qid, terms in qterms.items():
+            key = tuple(terms)
+            d = memo.get(key)
+            if d is None:
+                d = memo[key] = _matched_docids(reader, terms, tomb_l, accept)
+            if len(d):
+                yield reader, qid, d
+
+
 def _attr_values(reader, attr: str,
                  d: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(docids, int64 attr values) for matched docids `d`, with NULL-attr
@@ -58,7 +88,12 @@ def _attr_values(reader, attr: str,
     doc-length array) is never null and skips the mask."""
     if attr == "dl":
         return d, reader.doclen(d).astype(np.int64)
-    raw = pd.Series(reader.doc_attribute(attr)[d - reader._min_docid])
+    raw = pd.Series(
+        reader.doc_attribute(attr)[d - reader._min_docid]).infer_objects()
+    if raw.dtype.kind in "iu":
+        # integer column without nulls: straight to int64 — a float64
+        # detour would round values beyond 2^53
+        return d, raw.to_numpy(np.int64)
     ok = raw.notna().to_numpy()
     vals = (np.asarray(raw.to_numpy(), dtype=np.float64) if ok.all()
             else np.asarray(raw[ok].tolist(), dtype=np.float64))
@@ -88,66 +123,27 @@ def facet_counts(
     facet value if it contains ANY query term (deleted docs excluded,
     doc_filter honored — the counts agree with what filtered search
     would return)."""
-    from jvector_spark.operators.wand import scatter_paths
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
+    def run(paths: list[str], qt: dict,
+            tomb) -> Iterator[pd.DataFrame]:
+        for reader, qid, d in _matches(paths, qt, tomb, doc_filter):
+            # dropna=False: SQL GROUP BY keeps one NULL group — silently
+            # omitting null-attribute matches would under-count vs the
+            # oracle (collapse_topk preserves the null group the same way)
+            counts = (pd.Series(reader.doc_attribute(facet_col)[
+                d - reader._min_docid]).value_counts(dropna=False))
+            facet_vals = [
+                None if (v is None or (isinstance(v, float) and v != v))
+                else str(v)
+                for v in counts.index.tolist()]
+            yield pd.DataFrame({
+                "qid": np.int64(qid),
+                "facet": pd.Series(facet_vals, dtype=object),
+                "n_docs": counts.to_numpy(np.int64),
+            })
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = "qid long, facet string, n_docs long"
-    if not seg_paths:
-        return spark.createDataFrame([], schema)
-    sc = spark.sparkContext
-    b_q = sc.broadcast(qterms)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        qt = b_q.value
-        probe = sorted({t for ts in qt.values() for t in ts})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
-                continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
-            accept = reader.accepted_docids(doc_filter) if doc_filter else None
-            vals = reader.doc_attribute(facet_col)
-            cache: dict = {}
-            for qid, terms in qt.items():
-                key = tuple(terms)
-                if key in cache:
-                    counts = cache[key]
-                else:
-                    d = _matched_docids(reader, terms, tomb_l, accept)
-                    # dropna=False: SQL GROUP BY keeps one NULL group —
-                    # silently omitting null-attribute matches would
-                    # under-count vs the oracle (collapse_topk already
-                    # preserves the distinct null group the same way)
-                    counts = cache[key] = (
-                        pd.Series(vals[d - reader._min_docid])
-                        .value_counts(dropna=False)
-                        if len(d) else None
-                    )
-                if counts is not None and len(counts):
-                    facet_vals = [
-                        None if (v is None or (isinstance(v, float)
-                                               and v != v))
-                        else str(v)
-                        for v in counts.index.tolist()]
-                    yield pd.DataFrame({
-                        "qid": np.int64(qid),
-                        "facet": pd.Series(facet_vals, dtype=object),
-                        "n_docs": counts.to_numpy(np.int64),
-                    })
-
-    partial = paths_df.mapInPandas(run, schema)
+    partial = scatter_segments(
+        spark, index_dir, run, "qid long, facet string, n_docs long",
+        num_tasks, lambda _m: _query_terms(queries))
     # the only shuffle: |queries| x |facet values| rows, corpus-size-free
     return partial.groupBy("qid", "facet").agg(
         F.sum("n_docs").alias("n_docs")
@@ -173,49 +169,27 @@ def collapse_topk(
     asc) so the chosen representative agrees with the SQL oracle even at
     sub-1e-6 score ties."""
     from jvector_spark.operators.wand import (
-        global_term_stats, idf_map, scatter_paths, score_query_on_segment,
-    )
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
+        global_term_stats, idf_map, score_query_on_segment,
     )
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    n_docs, avgdl = manifest["n_docs"], manifest["avgdl"]
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    ks = {int(r.qid): int(r.k) for r in queries.itertuples()}
-    all_t = sorted({t for ts in qterms.values() for t in ts})
-    idfs = idf_map(n_docs, global_term_stats(spark, index_dir, all_t)
-                   if all_t else {})
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = "qid long, grp string, docid long, score double"
-    if not seg_paths:
-        return spark.createDataFrame([], schema)
-    sc = spark.sparkContext
-    b_q = sc.broadcast((qterms, ks))
-    b_idfs = sc.broadcast(idfs)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    def prepare(manifest: dict):
+        qt = _query_terms(queries)
+        all_t = _probe(qt)
+        idfs = idf_map(manifest["n_docs"],
+                       global_term_stats(spark, index_dir, all_t)
+                       if all_t else {})
+        return qt, idfs, manifest["avgdl"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        (qt, _), idfs_l = b_q.value, b_idfs.value
-        probe = sorted({t for ts in qt.values() for t in ts})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
-                continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
+    def run(paths: list[str], payload, tomb) -> Iterator[pd.DataFrame]:
+        qt, idfs, avgdl = payload
+        for _path, reader, tomb_l in open_segments(paths, tomb, _probe(qt)):
             accept = reader.accepted_docids(doc_filter) if doc_filter else None
             grp = reader.doc_attribute(collapse_col)
             cache: dict = {}
             for qid, terms in qt.items():
                 # k=n_docs + theta=0 => exact full scoring of every match
                 d, s = score_query_on_segment(
-                    reader, terms, idfs_l, 1 << 62, 0.0, avgdl, tomb_l,
+                    reader, terms, idfs, 1 << 62, 0.0, avgdl, tomb_l,
                     cache, accept,
                 )
                 if not len(d):
@@ -235,13 +209,14 @@ def collapse_topk(
                 g_sel = pd.Series(g[order])
                 g_col = np.where(g_sel.notna(),
                                  g_sel.astype(str), None)
-                pdf = pd.DataFrame({
+                yield pd.DataFrame({
                     "qid": np.int64(qid), "grp": g_col,
                     "docid": d[order], "score": s[order],
                 }).drop_duplicates("grp", keep="first")
-                yield pdf
 
-    return paths_df.mapInPandas(run, schema)
+    return scatter_segments(
+        spark, index_dir, run, "qid long, grp string, docid long, score double",
+        num_tasks, prepare)
 
 
 def _sidecar_attr_best_signv(seg_path: str, attr: str,
@@ -281,38 +256,29 @@ def sorted_scan_partition(
     doc_filter: dict | None,
     attr: str,
     sign: int,
-    reader_cls=None,
+    reader_cls=SegmentReader,
 ) -> Iterator[pd.DataFrame]:
     """One task's sorted-search scan over its segment list, with θ
     propagation + stats-based segment skip (see sorted_search). Module-
     level so the skip behavior is directly testable in-process;
     `reader_cls` lets tests observe which segments actually open."""
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_term_bloom,
-    )
-
-    if reader_cls is None:
-        reader_cls = SegmentReader
-    probe = sorted({t for ts in qterms.values() for t in ts})
     # kept sign*v values per query across THIS task's segments (the θ
     # state); θ_q = worst kept value once k are held
     kept: dict[int, np.ndarray] = {q: np.zeros(0, np.int64) for q in qterms}
-    for path in paths:
-        best_signv = _sidecar_attr_best_signv(path, attr, sign)
-        if best_signv is not None and all(
-            ks[q] <= 0 or (len(kept[q]) >= ks[q]
-                           and best_signv > kept[q][-1])
-            for q in qterms
-        ):
-            continue  # no query can improve: metadata-only skip
-        bloom = load_term_bloom(path)
-        if bloom is not None and probe and not any(
-            bloom_may_contain(bloom, t) for t in probe
-        ):
-            continue
-        reader = reader_cls(path)
-        seg_tomb = (tombstones.for_segment(path)
-                    if hasattr(tombstones, "for_segment") else tombstones)
+    best: dict[str, int | None] = {}
+
+    def may_improve(path: str) -> bool:
+        # metadata-only skip, ahead of the bloom probe: no query can
+        # improve on a segment whose attribute range is dominated
+        b = best[path] = _sidecar_attr_best_signv(path, attr, sign)
+        return b is None or not all(
+            ks[q] <= 0 or (len(kept[q]) >= ks[q] and b > kept[q][-1])
+            for q in qterms)
+
+    for path, reader, seg_tomb in open_segments(
+            filter(may_improve, paths), tombstones, _probe(qterms),
+            reader_cls=reader_cls):
+        best_signv = best[path]
         accept = reader.accepted_docids(doc_filter) if doc_filter else None
         cache: dict = {}
         for qid, terms in qterms.items():
@@ -371,32 +337,19 @@ def sorted_search(
     opened (no postings decode, no sidecar row read). Ties process the
     segment (a tied value with a smaller docid can still win), so the
     result stays exact. Stats-less sidecars fail open to the full scan."""
-    from jvector_spark.operators.wand import (
-        empty_topk, merge_topk, scatter_paths)
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
+    from jvector_spark.operators.wand import merge_topk
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
     ks = {int(r.qid): int(r.k) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    if not seg_paths:
-        return empty_topk(spark, "sort_key", merge)
-    sc = spark.sparkContext
-    b_q = sc.broadcast((qterms, ks))
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
     sign = 1 if ascending else -1  # lexsort ascending on sign*v
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        (qt, ks_l) = b_q.value
+    def run(paths: list[str], payload, tomb) -> Iterator[pd.DataFrame]:
+        qt, ks_l = payload
         yield from sorted_scan_partition(
-            paths, qt, ks_l, tomb_view, doc_filter, attr, sign)
+            paths, qt, ks_l, tomb, doc_filter, attr, sign)
 
-    partial = paths_df.mapInPandas(run, "qid long, docid long, sort_key long")
+    partial = scatter_segments(
+        spark, index_dir, run, "qid long, docid long, sort_key long",
+        num_tasks, lambda _m: (_query_terms(queries), ks))
     if ascending:
         merged = merge_topk(
             partial.withColumn("sort_key", -F.col("sort_key")), ks,
@@ -452,53 +405,21 @@ def attr_stats(
     |queries|-row groupBy — corpus rows never shuffle. avg is derived
     from (sum, n) after the merge and rounded to 6 for cross-engine
     display parity."""
-    from jvector_spark.operators.wand import scatter_paths
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
+    def run(paths: list[str], qt: dict, tomb) -> Iterator[pd.DataFrame]:
+        for reader, qid, d in _matches(paths, qt, tomb, doc_filter):
+            _, v = _attr_values(reader, attr, d)
+            if not len(v):
+                continue  # every matched doc had a null attr
+            yield pd.DataFrame({
+                "qid": [np.int64(qid)], "n_docs": [len(v)],
+                "min_attr": [int(v.min())],
+                "max_attr": [int(v.max())],
+                "sum_attr": [int(v.sum())]})
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = ("qid long, n_docs long, min_attr long, max_attr long, "
-              "sum_attr long")
-    if not seg_paths:
-        partial = spark.createDataFrame([], schema)
-    else:
-        sc = spark.sparkContext
-        b_q = sc.broadcast(qterms)
-        paths_df = scatter_paths(spark, seg_paths, num_tasks)
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            paths = [p for pdf in batches for p in pdf["path"].tolist()]
-            qt = b_q.value
-            probe = sorted({t for ts in qt.values() for t in ts})
-            for path in paths:
-                bloom = load_term_bloom(path)
-                if bloom is not None and probe and not any(
-                    bloom_may_contain(bloom, t) for t in probe
-                ):
-                    continue
-                reader = SegmentReader(path)
-                tomb_l = tomb_view.for_segment(path)
-                accept = (reader.accepted_docids(doc_filter)
-                          if doc_filter else None)
-                for qid, terms in qt.items():
-                    d = _matched_docids(reader, terms, tomb_l, accept)
-                    if not len(d):
-                        continue
-                    _, v = _attr_values(reader, attr, d)
-                    if not len(v):
-                        continue  # every matched doc had a null attr
-                    yield pd.DataFrame({
-                        "qid": [np.int64(qid)], "n_docs": [len(v)],
-                        "min_attr": [int(v.min())],
-                        "max_attr": [int(v.max())],
-                        "sum_attr": [int(v.sum())]})
-
-        partial = paths_df.mapInPandas(run, schema)
+    partial = scatter_segments(
+        spark, index_dir, run,
+        "qid long, n_docs long, min_attr long, max_attr long, sum_attr long",
+        num_tasks, lambda _m: _query_terms(queries))
     return (
         partial.groupBy("qid").agg(
             F.sum("n_docs").alias("n_docs"),
@@ -525,53 +446,23 @@ def attr_histogram(
     the timestamp): (qid, bin, n_docs) where bin = floor(attr/width)*width.
     Same scale shape as facet_counts — per-segment binned counts, then a
     (qid × bins)-row final reduce; corpus rows never shuffle."""
-    from jvector_spark.operators.wand import scatter_paths
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
-
     if bin_width <= 0:
         raise ValueError("bin_width must be positive")
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = "qid long, bin long, n_docs long"
-    if not seg_paths:
-        return spark.createDataFrame([], schema)
-    sc = spark.sparkContext
-    b_q = sc.broadcast(qterms)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
     w = int(bin_width)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        qt = b_q.value
-        probe = sorted({t for ts in qt.values() for t in ts})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
+    def run(paths: list[str], qt: dict, tomb) -> Iterator[pd.DataFrame]:
+        for reader, qid, d in _matches(paths, qt, tomb, doc_filter):
+            _, v = _attr_values(reader, attr, d)
+            if not len(v):
                 continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
-            accept = (reader.accepted_docids(doc_filter)
-                      if doc_filter else None)
-            for qid, terms in qt.items():
-                d = _matched_docids(reader, terms, tomb_l, accept)
-                if not len(d):
-                    continue
-                _, v = _attr_values(reader, attr, d)
-                if not len(v):
-                    continue
-                bins, counts = np.unique((v // w) * w, return_counts=True)
-                yield pd.DataFrame({
-                    "qid": np.int64(qid), "bin": bins,
-                    "n_docs": counts.astype(np.int64)})
+            bins, counts = np.unique((v // w) * w, return_counts=True)
+            yield pd.DataFrame({
+                "qid": np.int64(qid), "bin": bins,
+                "n_docs": counts.astype(np.int64)})
 
-    partial = paths_df.mapInPandas(run, schema)
+    partial = scatter_segments(
+        spark, index_dir, run, "qid long, bin long, n_docs long",
+        num_tasks, lambda _m: _query_terms(queries))
     return partial.groupBy("qid", "bin").agg(
         F.sum("n_docs").alias("n_docs"))
 
@@ -593,43 +484,12 @@ def match_export(
     merge is needed — the result is already disjoint across tasks). At
     10^12 docs this is the write-straight-to-parquet shape; bound it
     upstream with doc_filter if the match set must be narrowed."""
-    from jvector_spark.operators.wand import scatter_paths
-    from jvector_spark.plans.merge import tombstone_view
-    from jvector_spark.sources.segment import (
-        SegmentReader, bloom_may_contain, load_manifest, load_term_bloom,
-    )
+    def run(paths: list[str], qt: dict, tomb) -> Iterator[pd.DataFrame]:
+        for _reader, qid, d in _matches(paths, qt, tomb, doc_filter):
+            yield pd.DataFrame({"qid": np.int64(qid), "docid": d})
 
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    qterms = {int(r.qid): sorted(set(r.terms)) for r in queries.itertuples()}
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    schema = "qid long, docid long"
-    if not seg_paths:
-        return spark.createDataFrame([], schema)
-    sc = spark.sparkContext
-    b_q = sc.broadcast(qterms)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        qt = b_q.value
-        probe = sorted({t for ts in qt.values() for t in ts})
-        for path in paths:
-            bloom = load_term_bloom(path)
-            if bloom is not None and probe and not any(
-                bloom_may_contain(bloom, t) for t in probe
-            ):
-                continue
-            reader = SegmentReader(path)
-            tomb_l = tomb_view.for_segment(path)
-            accept = (reader.accepted_docids(doc_filter)
-                      if doc_filter else None)
-            for qid, terms in qt.items():
-                d = _matched_docids(reader, terms, tomb_l, accept)
-                if len(d):
-                    yield pd.DataFrame({"qid": np.int64(qid), "docid": d})
-
-    return paths_df.mapInPandas(run, schema)
+    return scatter_segments(spark, index_dir, run, "qid long, docid long",
+                            num_tasks, lambda _m: _query_terms(queries))
 
 
 def match_count(

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from jvector_spark.functions.tokenizer import tokenize_series
-from jvector_spark.sources.segment import SegmentReader, load_manifest
+from jvector_spark.sources.segment import SegmentReader
 
 
 def _positions_by_doc(
@@ -123,50 +123,52 @@ def phrase_search(
     index agree on token boundaries. Ranking: n_matches desc, docid asc,
     top-k per query. Same distribution shape as wand.search_index.
     """
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    from jvector_spark.operators.wand import (
-        empty_topk, merge_topk, scatter_paths)
-    from jvector_spark.plans.merge import tombstone_view
+    from jvector_spark.operators.wand import merge_topk, scatter_segments
 
-    if not seg_paths:  # valid empty index (nothing can match any phrase)
-        return empty_topk(spark, "n_matches", merge)
-    if not manifest.get("has_positions"):
-        raise ValueError(
-            "index was built without positions=True — phrase queries need "
-            "the positional payload stream")
-    mode = manifest["tokenizer_mode"]
-    qp = queries.copy()
-    qp["terms"] = tokenize_series(qp["phrase"].astype(str), mode)
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    sc = spark.sparkContext
-    b_q = sc.broadcast(qp[["qid", "terms", "k"]])
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    def prepare(manifest: dict) -> pd.DataFrame:
+        if not manifest.get("has_positions"):
+            raise ValueError(
+                "index was built without positions=True — phrase queries "
+                "need the positional payload stream")
+        qp = queries[["qid", "k"]].copy()
+        qp["terms"] = tokenize_series(queries["phrase"].astype(str),
+                                      manifest["tokenizer_mode"])
+        return qp
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        out = []
-        for path in paths:
-            reader = SegmentReader(path)
-            if not reader.has_positions:
-                continue
-            tomb_l = tomb_view.for_segment(path)
-            for q in b_q.value.itertuples():
-                d, n = match_phrase_on_segment(
-                    reader, list(q.terms), tomb_l)
-                if len(d):
-                    # Bound the shuffle: per-(segment, query) top-k cut in
-                    # rank order (n_matches desc, docid asc) — top-k is
-                    # mergeable across segments, so a stop-word-ish phrase
-                    # over a big segment emits k rows, not millions
-                    # (mirrors regex.py's per-segment cut).
-                    top = np.lexsort((d, -n))[: int(q.k)]
-                    out.append(pd.DataFrame({
-                        "qid": int(q.qid), "docid": d[top],
-                        "n_matches": n[top]}))
-        if out:
-            yield pd.concat(out, ignore_index=True)
+    def run(paths: list[str], qp: pd.DataFrame,
+            tomb) -> Iterator[pd.DataFrame]:
+        yield from count_topk_partition(
+            paths, qp, tomb, lambda reader, q, tomb_l:
+            match_phrase_on_segment(reader, list(q.terms), tomb_l))
 
-    partial = paths_df.mapInPandas(run, "qid long, docid long, n_matches long")
-    ks = {int(q.qid): int(q.k) for q in qp.itertuples()}
+    partial = scatter_segments(spark, index_dir, run,
+                               "qid long, docid long, n_matches long",
+                               num_tasks, prepare)
+    ks = {int(q.qid): int(q.k) for q in queries.itertuples()}
     return merge_topk(partial, ks, "n_matches", merge)
+
+
+def count_topk_partition(paths: list[str], queries: pd.DataFrame, tomb,
+                         match) -> Iterator[pd.DataFrame]:
+    """One task of a positional count query (phrase, proximity):
+    `match(reader, query_row, segment_tombstones) -> (docids, n_matches)`
+    per (segment, query), cut to the query's k in rank order (n_matches
+    desc, docid asc). The cut bounds the shuffle: top-k is mergeable
+    across segments, so a stop-word-ish phrase over a big segment emits
+    k rows, not millions. Segments without positions hold no positional
+    matches."""
+    from jvector_spark.operators.wand import open_segments
+
+    probe = sorted({t for ts in queries["terms"] for t in ts})
+    out = []
+    for _path, reader, tomb_l in open_segments(paths, tomb, probe):
+        if not reader.has_positions:
+            continue
+        for q in queries.itertuples():
+            d, n = match(reader, q, tomb_l)
+            if len(d):
+                top = np.lexsort((d, -n))[: int(q.k)]
+                out.append(pd.DataFrame({
+                    "qid": int(q.qid), "docid": d[top], "n_matches": n[top]}))
+    if out:
+        yield pd.concat(out, ignore_index=True)

@@ -29,8 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from jvector_spark.operators.phrase import _positions_by_doc
-from jvector_spark.sources.segment import SegmentReader, load_manifest
+from jvector_spark.operators.phrase import (
+    _positions_by_doc, count_topk_partition)
+from jvector_spark.sources.segment import SegmentReader
 
 
 def window_match_count(
@@ -116,42 +117,24 @@ def proximity_search(
 ) -> DataFrame | pd.DataFrame:
     """queries(qid, terms:list[str], window:int, k) ->
     (qid, rank, docid, n_matches), ranked n_matches desc, docid asc."""
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    from jvector_spark.operators.wand import (
-        empty_topk, merge_topk, scatter_paths)
-    from jvector_spark.plans.merge import tombstone_view
+    from jvector_spark.operators.wand import merge_topk, scatter_segments
 
-    if not seg_paths:
-        return empty_topk(spark, "n_matches", merge)
-    if not manifest.get("has_positions"):
-        raise ValueError(
-            "index was built without positions=True — proximity queries "
-            "need the positional payload stream")
-    tomb_view = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
-    sc = spark.sparkContext
-    b_q = sc.broadcast(queries[["qid", "terms", "window", "k"]])
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    def prepare(manifest: dict) -> pd.DataFrame:
+        if not manifest.get("has_positions"):
+            raise ValueError(
+                "index was built without positions=True — proximity "
+                "queries need the positional payload stream")
+        return queries[["qid", "terms", "window", "k"]]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        out = []
-        for path in paths:
-            reader = SegmentReader(path)
-            if not reader.has_positions:
-                continue
-            tomb_l = tomb_view.for_segment(path)
-            for q in b_q.value.itertuples():
-                d, n = match_window_on_segment(
-                    reader, list(q.terms), int(q.window), tomb_l)
-                if len(d):
-                    top = np.lexsort((d, -n))[: int(q.k)]
-                    out.append(pd.DataFrame({
-                        "qid": int(q.qid), "docid": d[top],
-                        "n_matches": n[top]}))
-        if out:
-            yield pd.concat(out, ignore_index=True)
+    def run(paths: list[str], qs: pd.DataFrame,
+            tomb) -> Iterator[pd.DataFrame]:
+        yield from count_topk_partition(
+            paths, qs, tomb, lambda reader, q, tomb_l:
+            match_window_on_segment(reader, list(q.terms), int(q.window),
+                                    tomb_l))
 
-    partial = paths_df.mapInPandas(run, "qid long, docid long, n_matches long")
+    partial = scatter_segments(spark, index_dir, run,
+                               "qid long, docid long, n_matches long",
+                               num_tasks, prepare)
     ks = {int(q.qid): int(q.k) for q in queries.itertuples()}
     return merge_topk(partial, ks, "n_matches", merge)

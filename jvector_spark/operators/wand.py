@@ -129,18 +129,94 @@ def read_metrics(acc) -> dict:
 def scatter_paths(spark: SparkSession, seg_paths: list[str],
                   num_tasks: int | None) -> DataFrame:
     """Segment paths -> a small DataFrame pre-sliced into num_tasks
-    partitions (explicit numSlices — no repartition shuffle). Shared by
-    every index-scatter operator (BM25/phrase/regex)."""
+    partitions (explicit numSlices — no repartition shuffle). The task
+    count never exceeds the segment count: a task without segments is
+    pure Spark overhead."""
     if num_tasks is None:
-        num_tasks = min(len(seg_paths),
-                        int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-    num_tasks = max(1, num_tasks)
+        num_tasks = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_tasks = max(1, min(num_tasks, len(seg_paths)))
     return spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(p,) for p in seg_paths], numSlices=num_tasks
         ),
         "path string",
     )
+
+
+def scatter_segments(
+    spark: SparkSession,
+    index_dir: str,
+    task,
+    schema: str,
+    num_tasks: int | None,
+    prepare,
+) -> DataFrame:
+    """The driver side of every index-query surface (BM25, boolean,
+    phrase, proximity, regex, facets, verify): the scatter half of the
+    multi-index combine (GraphSearcher.java:368-385). Callers keep their
+    own merge (merge_topk, a groupBy, or none) over the returned lazy
+    partial DataFrame.
+
+    A zero-segment index (everything-tombstoned compaction output) is
+    valid and returns an empty `schema` frame BEFORE `prepare` runs, so
+    query-side work and its errors (idf lookups, positions checks, regex
+    expansion) never happen on it. Otherwise `prepare(manifest)` builds
+    the task payload on the driver, which is broadcast once, and
+    `task(paths, payload, tombstones)` runs once per Spark task over the
+    segment paths scatter_paths dealt it, yielding pandas frames of
+    `schema`. `tombstones` is the view at the manifest's own docid
+    epoch: small delete lists ship inline, large ones resolve per
+    segment from parquet shards — the driver never materializes (nor
+    broadcasts) an unbounded delete list."""
+    from jvector_spark.plans.merge import tombstone_view
+
+    manifest = load_manifest(index_dir)
+    seg_paths = [s["path"] for s in manifest["segments"]]
+    if not seg_paths:
+        return spark.createDataFrame([], schema)
+    b_payload = spark.sparkContext.broadcast(prepare(manifest))
+    tomb = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        paths = [p for pdf in batches for p in pdf["path"].tolist()]
+        if paths:
+            yield from task(paths, b_payload.value, tomb)
+
+    return scatter_paths(spark, seg_paths, num_tasks).mapInPandas(run, schema)
+
+
+def open_segments(
+    paths,
+    tombstones,  # np.ndarray | plans.merge.TombstoneView | None
+    probe=(),
+    pool: "SearcherPool | None" = None,
+    reader_cls=SegmentReader,
+) -> Iterator[tuple[str, SegmentReader, np.ndarray | None]]:
+    """The task side of every index-query surface: (path, reader,
+    segment tombstones) for each segment of `paths` that may hold a
+    `probe` term. Reads `paths` lazily, so a caller can filter it on
+    state its loop body updates.
+
+    Term-presence bloom (BQ 1-bit sketch analog): a segment whose bloom
+    rejects EVERY probe term never opens its dictionary — at thousands
+    of segments this skips whole-segment loads for selective
+    vocabularies. FP-safe: a false positive only costs the normal
+    lookup; an absent bloom.bin (pre-bloom segment) or an empty probe
+    never skips. Callers probe with terms every match must contain at
+    least one of. `pool` supplies pooled blooms and readers (warm
+    serving); `reader_cls` opens readers otherwise."""
+    from jvector_spark.sources.segment import bloom_may_contain, load_term_bloom
+
+    for path in paths:
+        bloom = pool.bloom(path) if pool is not None else load_term_bloom(path)
+        if bloom is not None and probe and not any(
+            bloom_may_contain(bloom, t) for t in probe
+        ):
+            continue
+        reader = pool.reader(path) if pool is not None else reader_cls(path)
+        yield path, reader, (tombstones.for_segment(path)
+                             if hasattr(tombstones, "for_segment")
+                             else tombstones)
 
 
 def _empty_result(value_col: str) -> pd.DataFrame:
@@ -163,8 +239,9 @@ def merge_topk(
     rank by value desc, docid asc, bounded per query. merge="spark" is a
     lazy window (composable); merge="driver" collects the bounded partial
     rows and merges with one numpy lexsort per query — the caller-thread
-    multi-index combine (GraphSearcher.java:368-385). Shared by
-    search_index / phrase_search / regex_token_topk."""
+    multi-index combine (GraphSearcher.java:368-385). Over an empty
+    partial (zero-segment index) both modes return the typed empty
+    result."""
     if merge == "driver":
         pdf = partial.toPandas()
         outs = []
@@ -179,8 +256,11 @@ def merge_topk(
             }))
         return (pd.concat(outs, ignore_index=True)
                 if outs else _empty_result(value_col))
+    # typed, so that an empty query set (an untyped `map()`) still
+    # resolves against the bigint qid column
     kmap = F.create_map(*[x for qid, k in ks.items()
-                          for x in (F.lit(qid), F.lit(k))])
+                          for x in (F.lit(qid), F.lit(k))]
+                        ).cast("map<bigint,int>")
     w = Window.partitionBy("qid").orderBy(F.desc(value_col), F.asc("docid"))
     return (
         partial.withColumn("rn", F.row_number().over(w))
@@ -188,18 +268,6 @@ def merge_topk(
         .select("qid", (F.col("rn") - 1).cast("int").alias("rank"),
                 "docid", value_col)
     )
-
-
-def empty_topk(spark: SparkSession, value_col: str,
-               merge: str) -> DataFrame | pd.DataFrame:
-    """A valid empty result in either merge mode (zero-segment indexes —
-    e.g. after an everything-tombstoned compaction — are legal)."""
-    pdf = _empty_result(value_col)
-    if merge == "driver":
-        return pdf
-    typ = "double" if value_col == "score" else "long"
-    return spark.createDataFrame(
-        pdf, f"qid long, rank int, docid long, {value_col} {typ}")
 
 
 def _tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
@@ -639,17 +707,6 @@ def search_partition(
            for qid in states
            if exclude.get(qid) is not None and len(exclude[qid])}
 
-    # tombstones may be a flat array (serving pool / tests) or a
-    # TombstoneView resolving PER SEGMENT (the scale path: each task reads
-    # only its segments' shards, never the global delete list)
-    per_segment_tomb = hasattr(tombstones, "for_segment")
-    if per_segment_tomb and getattr(tombstones, "inline", None) is not None:
-        # inline regime: for_segment returns the SAME array for every
-        # segment — hoist the per-query tombstone/exclude union out of the
-        # segment loop (S×Q identical union1d calls on the warm hot path)
-        tombstones = tombstones.inline
-        per_segment_tomb = False
-
     def _qtomb(seg_tomb: np.ndarray | None) -> dict[int, np.ndarray | None]:
         out: dict[int, np.ndarray | None] = {}
         for qid in states:
@@ -662,8 +719,6 @@ def search_partition(
                 out[qid] = np.union1d(seg_tomb, ex)
         return out
 
-    if not per_segment_tomb:
-        qtomb = _qtomb(tombstones)
     # terms shared by >=2 queries always decode fully (once, cached) —
     # repeated partial block decodes of the same hot term cost more than
     # one full decode amortized across the batch
@@ -672,27 +727,13 @@ def search_partition(
     usage = Counter(t for ts in qterms.values() for t in set(ts))
     hot = frozenset(t for t, n in usage.items() if n >= 2)
     all_terms = [t for t in usage if t in idfs]
-    from jvector_spark.sources.segment import bloom_may_contain, load_term_bloom
 
-    for path in seg_paths:
-        # term-presence bloom (BQ 1-bit sketch analog): a segment whose
-        # bloom rejects EVERY query term never opens its dictionary —
-        # at thousands of segments this skips whole-segment loads for
-        # selective vocabularies (FP-safe: false positives only cost the
-        # normal lookup; absent bloom.bin = pre-bloom segment, no skip)
-        bloom = pool.bloom(path) if pool is not None else load_term_bloom(path)
-        if bloom is not None and all_terms and not any(
-            bloom_may_contain(bloom, t) for t in all_terms
-        ):
-            if metrics is not None:
-                for qid in states:
-                    qs = metrics.setdefault(qid, {})
-                    qs["segments_bloom_skipped"] = (
-                        qs.get("segments_bloom_skipped", 0) + 1
-                    )
-            continue
+    opened = 0
+    qtomb_src = qtomb = None
+    for path, reader, seg_tomb in open_segments(
+            seg_paths, tombstones, all_terms, pool):
+        opened += 1
         if pool is not None:
-            reader = pool.reader(path)
             seg_cache = pool.cache(path)
             seg_cache["_hot"] = hot  # hot set is per request batch
             # pooled caches outlive the batch: partial block decodes of a
@@ -703,17 +744,12 @@ def search_partition(
             # get decoded when changes)
             seg_cache["_pooled"] = True
         else:
-            reader = SegmentReader(path)
             seg_cache = {"_hot": hot}  # shared across this segment's queries
-        if per_segment_tomb:
-            # shard read bounded by THIS segment's deletes (one small
-            # parquet, or the inline array when the index's delete list
-            # is small enough to ship in the closure). With no per-query
-            # excludes every entry is the same seg_tomb reference —
-            # build that dict directly rather than S×Q union passes
-            seg_tomb = tombstones.for_segment(path)
-            qtomb = ({qid: seg_tomb for qid in states} if not qex
-                     else _qtomb(seg_tomb))
+        if qtomb is None or seg_tomb is not qtomb_src:
+            # the inline tombstone regime (and a flat array) hands every
+            # segment the SAME array: the per-query tombstone/exclude
+            # union then runs once, not S×Q times on the warm hot path
+            qtomb_src, qtomb = seg_tomb, _qtomb(seg_tomb)
         accept = None
         if doc_filter:
             # memo per (segment, filter): ONE docs-sidecar read per
@@ -756,6 +792,12 @@ def search_partition(
                 keep = s >= min_score
                 d, s = d[keep], s[keep]
             st.push(d, s)
+    skipped = len(seg_paths) - opened  # segments the bloom rejected
+    if metrics is not None and skipped:
+        for qid in states:
+            qs = metrics.setdefault(qid, {})
+            qs["segments_bloom_skipped"] = (
+                qs.get("segments_bloom_skipped", 0) + skipped)
     out = [
         pd.DataFrame({"qid": qid, "docid": st.docids, "score": st.scores})
         for qid, st in states.items()
@@ -814,47 +856,34 @@ def search_index(
     scores stay exact, recall is traded for fewer block decodes. Keep 0.0
     (default) for rank-identical mode.
     """
-    manifest = load_manifest(index_dir)
-    seg_paths = [s["path"] for s in manifest["segments"]]
-    n_docs, avgdl = manifest["n_docs"], manifest["avgdl"]
-    all_terms = sorted({t for ts in queries["terms"] for t in ts})
-    dfm = global_term_stats(spark, index_dir, all_terms) if all_terms else {}
-    idfs = idf_map(n_docs, dfm)
-    from jvector_spark.plans.merge import tombstone_view
 
-    # per-segment tombstone resolution: small delete lists ship inline in
-    # the view; large ones resolve segment-side from parquet shards — the
-    # driver never materializes (nor broadcasts) an unbounded delete list
-    tomb = tombstone_view(index_dir, epoch=manifest.get("docid_epoch", 0))
+    def prepare(manifest: dict):
+        all_terms = sorted({t for ts in queries["terms"] for t in ts})
+        dfm = global_term_stats(spark, index_dir, all_terms) if all_terms else {}
+        return (queries[["qid", "terms", "k"]],
+                idf_map(manifest["n_docs"], dfm), manifest["avgdl"])
 
-    if not seg_paths:  # zero-segment index (everything-compacted) is valid
-        return empty_topk(spark, "score", merge)
-    sc = spark.sparkContext
-    b_q = sc.broadcast(queries[["qid", "terms", "k"]])
-    b_idfs = sc.broadcast(idfs)
-    paths_df = scatter_paths(spark, seg_paths, num_tasks)
+    def run(paths: list[str], payload, tomb) -> Iterator[pd.DataFrame]:
+        qs, idfs, avgdl = payload
+        task_metrics: dict | None = {} if metrics_acc is not None else None
+        yield search_partition(
+            paths, qs, idfs, avgdl, tomb, doc_filter, min_score, after,
+            task_metrics, mode, exclude=exclude, prune_epsilon=prune_epsilon,
+        )
+        if metrics_acc is not None:
+            from pyspark import TaskContext
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        paths = [p for pdf in batches for p in pdf["path"].tolist()]
-        if paths:
-            task_metrics: dict | None = {} if metrics_acc is not None else None
-            yield search_partition(
-                paths, b_q.value, b_idfs.value, avgdl, tomb,
-                doc_filter, min_score, after, task_metrics, mode,
-                exclude=exclude, prune_epsilon=prune_epsilon,
-            )
-            if metrics_acc is not None:
-                from pyspark import TaskContext
+            tc = TaskContext.get()
+            pid = tc.partitionId() if tc is not None else -1
+            # keyed by partition: a retried/speculative attempt or a
+            # re-materialization OVERWRITES its partition's entry
+            # instead of double-counting (Spark only guarantees
+            # exactly-once accumulators in actions)
+            metrics_acc.add({pid: task_metrics})
 
-                tc = TaskContext.get()
-                pid = tc.partitionId() if tc is not None else -1
-                # keyed by partition: a retried/speculative attempt or a
-                # re-materialization OVERWRITES its partition's entry
-                # instead of double-counting (Spark only guarantees
-                # exactly-once accumulators in actions)
-                metrics_acc.add({pid: task_metrics})
-
-    partial = paths_df.mapInPandas(run, "qid long, docid long, score double")
+    partial = scatter_segments(spark, index_dir, run,
+                               "qid long, docid long, score double",
+                               num_tasks, prepare)
     ks = {int(q.qid): int(q.k) for q in queries.itertuples()}
     return merge_topk(partial, ks, "score", merge)
 

@@ -72,8 +72,15 @@ def acquire_lease(index_dir: str, purpose: str = "build") -> str:
     ldir = os.path.join(index_dir, LEASES_DIR)
     os.makedirs(ldir, exist_ok=True)
     path = os.path.join(ldir, f"lease-{uuid.uuid4().hex}.json")
+    t0 = time.time()
     with open(path, "w") as f:
-        json.dump({"purpose": purpose, "start": time.time()}, f)
+        # vacuum compares the start with dir mtimes, which come from the
+        # filesystem clock; a coarse file timestamp can trail time.time(),
+        # so a dir staged right after this call could otherwise look
+        # older than the lease. The lease file's own creation mtime is on
+        # that clock and precedes every dir its writer stages.
+        start = min(t0, os.fstat(f.fileno()).st_mtime)
+        json.dump({"purpose": purpose, "start": start}, f)
     return path
 
 

@@ -32,7 +32,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from jvector_spark.sources.segment import SegmentReader, load_manifest
+from jvector_spark.sources.segment import SegmentReader
 
 VERIFY_SCHEMA = "segment_id string, ok boolean, errors array<string>"
 
@@ -149,24 +149,15 @@ def verify_index(
     task fscks its batch of segments; the driver never reads index data.
     `max_terms_per_segment` bounds the per-segment decode work for quick
     audits (None = full verification)."""
-    manifest = load_manifest(index_dir)
-    segs = [(s["segment_id"], s["path"]) for s in manifest["segments"]]
-    from jvector_spark.operators.wand import scatter_paths
+    from jvector_spark.operators.wand import scatter_segments
 
-    if not segs:
-        return spark.createDataFrame([], VERIFY_SCHEMA)
-    paths_df = scatter_paths(spark, [p for _, p in segs], num_tasks)
-    names = {p: sid for sid, p in segs}
-    b_names = spark.sparkContext.broadcast(names)
+    def run(paths: list[str], names: dict, _tomb) -> Iterator[pd.DataFrame]:
+        rows = []
+        for p in paths:
+            ok, errors = _verify_segment(p, max_terms_per_segment)
+            rows.append((names.get(p, p), ok, errors))
+        yield pd.DataFrame(rows, columns=["segment_id", "ok", "errors"])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                ok, errors = _verify_segment(p, max_terms_per_segment)
-                rows.append((b_names.value.get(p, p), ok, errors))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["segment_id", "ok", "errors"])
-
-    return paths_df.mapInPandas(run, VERIFY_SCHEMA)
+    return scatter_segments(
+        spark, index_dir, run, VERIFY_SCHEMA, num_tasks,
+        lambda m: {s["path"]: s["segment_id"] for s in m["segments"]})

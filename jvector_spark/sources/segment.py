@@ -990,24 +990,6 @@ def _build_segment_stream(
     return manifest_row("built", meta, time.time() - t0)
 
 
-def _build_one_segment(
-    pdf: pd.DataFrame,
-    index_dir: str,
-    mode: str,
-    content_col: str,
-    key_cols: tuple[str, ...],
-    block_size: int,
-    codec: str = "adaptive",
-    positions: bool = False,
-    quantize_meta: bool = False,
-) -> pd.DataFrame:
-    """Whole-frame convenience wrapper over the streaming builder."""
-    return _build_segment_stream(
-        iter([pdf]), index_dir, mode, content_col, key_cols, block_size,
-        codec, positions, quantize_meta
-    )
-
-
 def build_index(
     docs_with_ids: DataFrame,
     index_dir: str,

@@ -190,11 +190,18 @@ def test_compaction_no_tombstones_is_pure_merge(spark, corpus_df, corpus_pdf,
 
 def test_empty_index_queries_return_empty(spark, corpus_df, tmp_path_factory):
     """A zero-segment index (everything-tombstoned compaction output) is
-    valid: search/regex/phrase return EMPTY results, never crash."""
+    valid: every index-query surface returns an EMPTY result with its
+    usual columns and types, in every merge mode, never a crash."""
     import pandas as pd
 
+    from jvector_spark.operators.boolquery import boolean_search_index
+    from jvector_spark.operators.facets import (
+        attr_histogram, attr_stats, collapse_topk, facet_counts,
+        match_count, match_export, sorted_search)
     from jvector_spark.operators.phrase import phrase_search
+    from jvector_spark.operators.proximity import proximity_search
     from jvector_spark.operators.regex import regex_token_topk
+    from jvector_spark.plans.verify import verify_index
 
     idx = str(tmp_path_factory.mktemp("idx_e"))
     m = build_index(assign_dense_docids(corpus_df), idx, num_segments=2,
@@ -202,13 +209,70 @@ def test_empty_index_queries_return_empty(spark, corpus_df, tmp_path_factory):
     mark_deleted(idx, list(range(int(m["max_docid"].max()) + 1)))
     out = str(tmp_path_factory.mktemp("idx_e_out"))
     compact_index(spark, idx, out, target_segments=1)
+    assert load_manifest(out)["segments"] == []
+
+    def ranked(value: str, typ: str) -> list:
+        return [("qid", "bigint"), ("rank", "int"), ("docid", "bigint"),
+                (value, typ)]
+
+    def empty_spark(df, dtypes):
+        assert df.dtypes == dtypes
+        assert df.count() == 0
+
+    def empty_driver(pdf, value: str, typ: str):
+        assert len(pdf) == 0
+        assert {c: str(t) for c, t in pdf.dtypes.items()} == {
+            "qid": "int64", "rank": "int32", "docid": "int64", value: typ}
+
     q = pd.DataFrame({"qid": [0], "terms": [["import"]], "k": [5]})
-    assert search_index(spark, out, q).count() == 0
-    assert len(search_index(spark, out, q, merge="driver")) == 0
     rq = pd.DataFrame({"qid": [0], "pattern": ["^run_"], "k": [5]})
-    assert regex_token_topk(spark, out, rq).count() == 0
     pq_ = pd.DataFrame({"qid": [0], "phrase": ["import os"], "k": [5]})
-    assert len(phrase_search(spark, out, pq_, merge="driver")) == 0
+    xq = pd.DataFrame({"qid": [0], "terms": [["import", "os"]],
+                       "window": [4], "k": [5]})
+    bq = pd.DataFrame({"qid": [0], "query": ["import AND NOT os"],
+                       "k": [5]})
+    for value, typ, surface in [
+        ("score", "double", lambda mg: search_index(spark, out, q, merge=mg)),
+        ("n_occ", "bigint",
+         lambda mg: regex_token_topk(spark, out, rq, merge=mg)),
+        ("n_matches", "bigint",
+         lambda mg: phrase_search(spark, out, pq_, merge=mg)),
+        ("n_matches", "bigint",
+         lambda mg: proximity_search(spark, out, xq, merge=mg)),
+        ("score", "double",
+         lambda mg: boolean_search_index(spark, out, bq, merge=mg)),
+        ("sort_key", "bigint",
+         lambda mg: sorted_search(spark, out, q, merge=mg)),
+        ("sort_key", "bigint",
+         lambda mg: sorted_search(spark, out, q, ascending=True, merge=mg)),
+    ]:
+        empty_spark(surface("spark"), ranked(value, typ))
+        empty_driver(surface("driver"), value,
+                     "float64" if typ == "double" else "int64")
+
+    # an empty query set too: the typed k-map resolves with no entries
+    empty_spark(search_index(spark, out, q.iloc[:0]), ranked("score", "double"))
+
+    qt = q[["qid", "terms"]]
+    empty_spark(facet_counts(spark, out, qt, "lang"),
+                [("qid", "bigint"), ("facet", "string"),
+                 ("n_docs", "bigint")])
+    empty_spark(collapse_topk(spark, out, q, "repo"),
+                [("qid", "bigint"), ("grp", "string"), ("docid", "bigint"),
+                 ("score", "double")])
+    empty_spark(attr_stats(spark, out, qt),
+                [("qid", "bigint"), ("n_docs", "bigint"),
+                 ("min_attr", "bigint"), ("max_attr", "bigint"),
+                 ("sum_attr", "bigint"), ("avg_attr", "double")])
+    empty_spark(attr_histogram(spark, out, qt),
+                [("qid", "bigint"), ("bin", "bigint"), ("n_docs", "bigint")])
+    empty_spark(match_export(spark, out, qt),
+                [("qid", "bigint"), ("docid", "bigint")])
+    empty_spark(match_count(spark, out, qt),
+                [("qid", "bigint"), ("n_docs", "bigint")])
+    empty_spark(verify_index(spark, out),
+                [("segment_id", "string"), ("ok", "boolean"),
+                 ("errors", "array<string>")])
 
 
 def test_resume_rebuilds_when_build_params_change(spark, corpus_df,
@@ -390,6 +454,28 @@ def test_vacuum_respects_live_lease(spark, corpus_df, tmp_path_factory):
     assert vacuum_index(idx, min_age_sec=0,
                         lease_timeout_sec=0.0) == [staged2]
     release_lease(lease2)
+
+
+def test_lease_start_is_on_the_filesystem_clock(tmp_path, monkeypatch):
+    """Vacuum compares a lease's start with dir mtimes. The start must not
+    run ahead of the filesystem clock that stamps them, or a dir staged
+    right after acquisition looks older than the lease and is vacuumed
+    under a live writer. A coarse file timestamp trails time.time() by
+    up to a clock tick; the test widens that gap to 0.5 s."""
+    import json
+    import time
+
+    from jvector_spark.plans.merge import acquire_lease
+
+    real_time = time.time
+    monkeypatch.setattr(time, "time", lambda: real_time() + 0.5)
+    lease = acquire_lease(str(tmp_path))
+    monkeypatch.undo()
+    staged = tmp_path / "seg-0.tmp"
+    staged.mkdir()
+    with open(lease) as f:
+        start = json.load(f)["start"]
+    assert start <= os.path.getmtime(staged)
 
 
 def test_late_delete_survives_in_place_compaction(spark, corpus_df,

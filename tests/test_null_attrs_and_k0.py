@@ -87,6 +87,29 @@ def test_attr_histogram_skips_null_values(spark, nindex, ncorpus_pdf,
     assert got.set_index("bin")["n_docs"].to_dict() == exp
 
 
+def test_int64_attr_beyond_2_53_is_exact(spark, tmp_path_factory):
+    """Integer attributes reach sorted_search and attr_stats as int64:
+    odd values above 2**53 (2**53 + 1 first) have no float64 twin, so a
+    float detour would round them."""
+    pdf = generate_corpus(n_docs=60, seed=78).sort_values(
+        ["repo", "path", "commit"], kind="mergesort").reset_index(drop=True)
+    pdf["big"] = 2**53 + 1 + 2 * np.arange(len(pdf), dtype=np.int64)
+    idx = str(tmp_path_factory.mktemp("bigidx"))
+    build_index(assign_dense_docids(spark.createDataFrame(pdf)
+                                    .repartition(2)),
+                idx, num_segments=2,
+                key_cols=("repo", "path", "commit", "big"))
+    m = BM25Oracle(pdf).postings["import"][0]
+    v = pdf["big"].to_numpy(np.int64)[m]
+    got = sorted_search(spark, idx, Q, attr="big", ascending=True,
+                        merge="driver")
+    exp = sorted(zip(v.tolist(), m.tolist()))[:100]
+    assert list(zip(got["sort_key"].tolist(), got["docid"].tolist())) == exp
+    st = attr_stats(spark, idx, Q[["qid", "terms"]], attr="big").collect()[0]
+    assert (st["min_attr"], st["max_attr"], st["sum_attr"]) == (
+        int(v.min()), int(v.max()), int(v.sum()))
+
+
 def test_sorted_search_excludes_null_attr_docs(spark, nindex, ncorpus_pdf,
                                                matched):
     got = sorted_search(spark, nindex, Q, attr="stars",

@@ -18,6 +18,8 @@ from jvector_spark.operators.ids import assign_dense_docids
 from jvector_spark.operators.wand import (
     global_term_stats,
     idf_map,
+    open_segments,
+    scatter_paths,
     score_query_on_segment,
     search_index,
 )
@@ -353,6 +355,22 @@ def test_bloom_prefilter_skips_segments(spark, corpus_pdf, tmp_path_factory):
     m = read_metrics(acc)[0]
     assert m.get("segments_bloom_skipped", 0) >= 4, m
     assert m.get("segments_visited", 0) <= 2, m
+    # the shared task-side open is what skipped them, and the counter is
+    # exact: every segment it does not open is one bloom skip
+    opened = [p for p, _r, _t in open_segments(
+        list(manifest["path"]), None, ["zz_bloom_marker_token"])]
+    assert m["segments_bloom_skipped"] == len(manifest) - len(opened)
+    assert len(list(open_segments(list(manifest["path"]), None))) == len(
+        manifest)  # an empty probe never skips
+
+
+def test_scatter_paths_caps_tasks_at_segment_count(spark):
+    """An explicit task count above the segment count launches one task
+    per segment, not empty tasks."""
+    paths = [f"/nonexistent/seg-{i}" for i in range(4)]
+    assert scatter_paths(spark, paths, 16).rdd.getNumPartitions() == 4
+    assert scatter_paths(spark, paths, 2).rdd.getNumPartitions() == 2
+    assert scatter_paths(spark, paths, None).rdd.getNumPartitions() == 4
 
 
 def test_explain_score_matches_search(spark, index, oracle, queries_pdf):

@@ -150,3 +150,22 @@ def test_get_spark_master_parse_tolerates_commas():
     assert infer("local-cluster[2,1,1024]") == 2
     assert infer("local[*]") == 32
     assert infer("spark://host:7077") == 32
+
+
+@pytest.mark.parametrize("form", [
+    "--py-files {}", "--py-files={}", "--py-files='{}'", '--py-files "{}"'])
+def test_ensure_importable_reads_every_pyfiles_form(form, tmp_path,
+                                                    monkeypatch):
+    """The sessionless CLI paths recover the --py-files zip from
+    PYSPARK_SUBMIT_ARGS in every argument form, `--py-files=path`
+    included."""
+    from jvector_spark import cli
+
+    z = tmp_path / "deps.zip"
+    z.write_bytes(b"")
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS",
+                       f"--master local[2] {form.format(z)} pyspark-shell")
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setitem(sys.modules, "jvector_spark", None)  # not importable
+    cli._ensure_importable()
+    assert sys.path[0] == str(z)
